@@ -116,6 +116,24 @@ object GraftSession {
       // pinning 0 locally aligns local mode with the cluster code path
       // rather than tuning away from it.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // Local filesystem without process forks, local only: with no
+      // native libhadoop, Hadoop's RawLocalFileSystem forks `chmod` for
+      // every file it creates and `readlink` for every FileContext
+      // rename — every offset/commit-log file, state delta and `.crc`
+      // sidecar of a checkpointed stream, every parquet part file.
+      // graft.io.NioRawLocalFileSystem answers both through
+      // java.nio.file with the same bits and statuses (LocalFsSpec).
+      // Both Hadoop APIs are pointed at it: FileSystem (parquet, the
+      // exactly-once markers) and FileContext (the streaming checkpoint
+      // manager). Measured on stream-dedup (perfbench, 4 vCPU, median
+      // of 3 traced runs): trigger p50 239→108 ms, state commit
+      // 250→11 ms, wal commit 29→2.3 ms per trigger; event latency p50
+      // 357→173 ms over 10 untraced seeds. A cluster's checkpoints
+      // live on a distributed store, and its executors may have the
+      // native library, so the cluster builder keeps Hadoop's defaults.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.NioLocalFs].getName)
     // Local scratch on tmpfs when the platform has one: single-host
     // shuffle blocks never leave the box, so an ext4 scratch dir pays
     // journaling + writeback syscalls for durability nothing needs

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.pipeline.{BatchContext, Pipeline}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
@@ -57,24 +58,10 @@ object MicroBatch {
       availableNow: Boolean = false,
       checkpoint: Option[String] = None): StreamingQuery = {
     require(processor != null, "invalid processor")
-    val timeout = processorTimeout match {
-      case f: FiniteDuration if f > Duration.Zero => f
-      case _ => Pipeline.DefaultTimeout
-    }
-    val trigger =
-      if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(pollInterval.toMillis)
-    val base = stream.writeStream
-      .queryName("graft-micro-batch")
-      .trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
+    val timeout = batchTimeout(processorTimeout)
+    writer(stream, "graft-micro-batch", pollInterval, availableNow, checkpoint)
       .foreachBatch { (df: DataFrame, _: Long) =>
-        val deadline = System.nanoTime() + timeout.toNanos
-        val ctx = new BatchContext {
-          def isExpired: Boolean = System.nanoTime() > deadline
-          def deadlineNanos: Long = deadline
-        }
+        val ctx = batchContext(timeout)
         val result =
           try processor(ctx, df)
           catch { case NonFatal(e) => Failure(e) }
@@ -86,6 +73,38 @@ object MicroBatch {
         }
       }
       .start()
+  }
+
+  private val started = new AtomicLong(0)
+
+  /** The writer both entry points share: the poll trigger, the optional
+    * checkpoint, and a query name unique in the JVM — Spark refuses to
+    * start a query while one with the same name is active in the
+    * session, so a fixed name would allow one pipeline at a time.
+    */
+  private def writer(stream: DataFrame, kind: String, pollInterval: FiniteDuration,
+                     availableNow: Boolean, checkpoint: Option[String]): DataStreamWriter[Row] = {
+    val w = stream.writeStream
+      .queryName(s"$kind-${started.incrementAndGet()}")
+      .trigger(
+        if (availableNow) Trigger.AvailableNow()
+        else Trigger.ProcessingTime(pollInterval.toMillis))
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    w
+  }
+
+  private def batchTimeout(processorTimeout: Duration): FiniteDuration =
+    processorTimeout match {
+      case f: FiniteDuration if f > Duration.Zero => f
+      case _ => Pipeline.DefaultTimeout
+    }
+
+  private def batchContext(timeout: FiniteDuration): BatchContext = {
+    val deadline = System.nanoTime() + timeout.toNanos
+    new BatchContext {
+      def isExpired: Boolean = System.nanoTime() > deadline
+      def deadlineNanos: Long = deadline
+    }
   }
 
   private def safeFinalize(
@@ -158,24 +177,10 @@ object MicroBatch {
       availableNow: Boolean = false,
       checkpoint: Option[String] = None): StreamingQuery = {
     require(processor != null, "invalid processor")
-    val timeout = processorTimeout match {
-      case f: FiniteDuration if f > Duration.Zero => f
-      case _ => Pipeline.DefaultTimeout
-    }
-    val trigger =
-      if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(pollInterval.toMillis)
-    val base = stream.writeStream
-      .queryName("graft-micro-batch-eo")
-      .trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
+    val timeout = batchTimeout(processorTimeout)
+    writer(stream, "graft-micro-batch-eo", pollInterval, availableNow, checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val deadline = System.nanoTime() + timeout.toNanos
-        val ctx = new BatchContext {
-          def isExpired: Boolean = System.nanoTime() > deadline
-          def deadlineNanos: Long = deadline
-        }
+        val ctx = batchContext(timeout)
         processor(ctx, df) match {
           case Success(out) => exactlyOnceParquetAppend(out, batchId, dataDir, logDir)
           case Failure(e)   => throw e // fail the query: WAL replays the batch

@@ -32,6 +32,26 @@ class GraftSessionSpec extends AnyFunSuite {
       "simhash must be order-invariant")
   }
 
+  test("the fork-free local filesystem is set by the local posture only") {
+    // the builder's pending options, read without creating a session
+    def options(b: org.apache.spark.sql.SparkSession.Builder): Map[String, String] =
+      b.getClass.getMethod("options").invoke(b)
+        .asInstanceOf[scala.collection.mutable.HashMap[String, String]].toMap
+    val local = options(GraftSession.local(4))
+    val cluster = options(GraftSession.builder("cluster", shufflePartitions = 4))
+    val impls = Map(
+      "fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName)
+    for ((key, impl) <- impls) {
+      assert(local.get(s"spark.hadoop.$key").contains(impl))
+      assert(!cluster.contains(s"spark.hadoop.$key"))
+      assert(spark.sparkContext.hadoopConfiguration.get(key) == impl)
+    }
+    // the JVM-wide FileSystem cache hands parquet writers the same class
+    assert(org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[graft.io.NioLocalFileSystem])
+  }
+
   test("nonsensical shuffle width fails at construction, not at runtime") {
     intercept[IllegalArgumentException] {
       GraftSession.builder("bad", shufflePartitions = 0)

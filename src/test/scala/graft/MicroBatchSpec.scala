@@ -366,6 +366,30 @@ class MicroBatchSpec extends AnyFunSuite {
     assert(oks.get() >= 1, "stream did not continue after a batch failure")
   }
 
+  test("two pipelines of each kind run side by side in one session under distinct names") {
+    import java.nio.file.Files
+    val batches = Seq.fill(2)(new AtomicInteger(0))
+    def rate = spark.readStream.format("rate").option("rowsPerSecond", "20").load()
+    val plain = batches.map(n => MicroBatch.start(rate,
+      processor = (_, df) => Success(df),
+      finalizer = (_, _) => n.incrementAndGet(),
+      pollInterval = 100.millis))
+    val exactlyOnce = Seq.fill(2)(MicroBatch.startExactlyOnce(rate,
+      processor = (_, df) => Success(df),
+      dataDir = Files.createTempDirectory("graft-mb-eo-data").toString,
+      logDir = Files.createTempDirectory("graft-mb-eo-log").toString,
+      pollInterval = 100.millis))
+    val all = plain ++ exactlyOnce
+    try {
+      val deadline = System.currentTimeMillis() + 15000
+      while (batches.exists(_.get() < 1) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(all.forall(_.isActive), all.flatMap(_.exception).mkString("; "))
+      assert(batches.forall(_.get() >= 1), "a side-by-side pipeline processed no batch")
+      assert(all.map(_.name).distinct.size == all.size, all.map(_.name))
+    } finally all.foreach(MicroBatch.stopGracefully)
+  }
+
   test("facade over a live stream end-to-end: supplier-error skip, timeout substitution, graceful stop, listener bridge") {
     // the §1.2/§7.4 mapping exercised as ONE pipeline at the real
     // seam: a MemoryStream source, the reference's scripted outcome
